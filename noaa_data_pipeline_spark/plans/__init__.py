@@ -39,81 +39,51 @@ PLAN_MODULES = [
 
 # The driver gate records exactly the first 50 registry entries, so
 # iteration order decides which entries get fresh driver evidence
-# each round. (The driver's window is 50 slots in EVERY round type —
-# the r15 belief that optimization rounds re-run the full registry
-# was wrong, CORRECTNESS_r15 was a 50-slot window like every other
-# round; the r15 VERDICT flags this and item 6 drafts this rotation.
-# Full-registry coverage still exists each round through the local
-# gates AND the driver's own pytest run: test_registry_oracle
-# parametrizes over all registry entries at sf0.001.)
+# each round. Full-registry coverage still exists each round through
+# the local gates and the pytest run: test_registry_oracle
+# parametrizes over all registry entries at sf0.001.
 #
-# Round 16 window:
-# - 20 slots: every r15 performance-edited entry that had no
-#   POST-edit driver row (the r15 windows held the r12 cohort, so
-#   these edits were only covered by the pytest sf0.001 sweep and
-#   the local full gates — r15 VERDICT item 6 queues them here):
-#   the minhash triple, the CC builder + its three consumers, the
-#   PCA pair + dim-reduction eval, knn-graph, mmr, hll,
-#   column-profile, language-id, the four cosine-fold entries, and
-#   recall-eval.
-# - 3 slots: the r16 plan edits (text_tfidf_topk,
-#   dedup_containment_ngram, docs_curation_pipeline_e2e — see the
-#   inline notes).
-# - 27 slots: the oldest-evidence cohort — entries whose last clean
-#   driver row is round 11 (ledger `round` field), alphabetical,
-#   with text_perplexity_proxy pulled in (r16 examined/edited).
-#   Nine r11 entries don't fit the window
-#   (sample_stratified_hash, sim_incremental_ivf_insert,
-#   sim_ivf_multiprobe, source_curation_report, split_train_val_hash,
-#   stream_compaction_report, stream_windowed_counts,
-#   text_repetition_ratio, text_token_rarity,
-#   q22_global_sales_opportunity — none edited since
-#   r11; all covered by the pytest oracle sweep and the full local
-#   gates each round).
-# - The sample_weighted_priority / docs_token_drift_tvd promotions
-#   deferred from r15 are NOT taken: promotions add registry
-#   surface, and optimization rounds add no features.
+# Window order:
+# - every entry with no clean gate row in the freshness window
+#   (its last clean row is older than the three most recent
+#   CORRECTNESS_r*.json files), alphabetical;
+# - entries whose plan source changed since their last gate proof
+#   (plan_ledger.json digest drift);
+# - the oldest clean gate evidence, then name, until 50 slots.
+# Entries that do not fit wait for the next rotation; the pytest
+# oracle sweep and the full local gates still cover them.
 # NOTE (process): rotation only picks what the DRIVER re-checks;
 # every round must still pass the full-registry local gate
 # (tools/check_correctness.py, see GATE_LOG.md) before snapshot.
 GATE_PRIORITY = [
-    # --- r15 performance edits lacking a post-edit driver row
-    "dedup_minhash_lsh", "dedup_minhash_estimator_quality",
-    "dedup_incremental_minhash", "dedup_clusters_cc",
-    "dedup_purge_report", "split_leakage_safe", "dedup_semantic_purge",
-    "sim_knn_graph", "emb_pca_power_iteration", "emb_pca_project_scores",
-    "emb_dim_reduction_eval", "sim_mmr_rerank",
-    "events_distinct_users_hll", "events_column_profile",
-    "text_language_id", "sim_ann_lsh_hyperplane",
-    "dedup_embedding_cosine", "dedup_semantic_clusters",
-    "sim_ann_recall_eval", "sim_cosine_range_search",
-    # --- r16 plan edits (text_tfidf_topk: split tried + reverted —
-    #     final body identical to its r15-gated form, re-proof cheap;
-    #     dedup_containment_ngram: self-join shuffle_hash hint; its
-    #     slot displaces text_token_rarity from the r11 cohort, which
-    #     slides to the not-fitting list below)
-    "text_tfidf_topk", "dedup_containment_ngram",
-    # docs_curation_pipeline_e2e: r16 comment-only edit inside its
-    # function body (the SHUFFLE_HASH fallback correction) — the
-    # digest meta-test demands re-proof for ANY source change; its
-    # slot displaces q22_global_sales_opportunity (r11 cohort,
-    # unedited, slides to the not-fitting list)
-    "docs_curation_pipeline_e2e",
-    # --- oldest driver evidence (r11 cohort), alphabetical
-    "cube_orders_priority_status", "docs_pack_sequences",
-    "events_anomaly_zscore", "events_funnel_ordered",
-    "events_grouping_sets_marginals", "events_interval_overlap_join",
-    "events_linear_interpolate", "events_percentiles_approx_sketch",
-    "events_retention_cohorts", "events_session_window_native",
-    "events_sessionize_batch", "events_sliding_24h_range_window",
-    "kmeans_embeddings", "lake_bucketed_copartition_join",
-    "orders_scd2_status_intervals", "orders_status_transitions",
-    "q10_returned_items_customers", "q13_customer_order_distribution",
-    "q16_supplier_part_relationships", "q17_small_quantity_revenue",
-    "q20_excess_stock_suppliers", "q21_waiting_suppliers",
-    "q6_forecast_revenue_delta",
-    "q7_volume_shipping", "q9_product_type_profit",
-    "text_fingerprint_winnow", "text_perplexity_proxy",
+    # --- no clean gate row in the freshness window
+    "corpus_token_coverage", "customer_order_counts",
+    "customers_without_recent_orders", "decontam_ngram_overlap",
+    "dedup_exact", "dedup_ngram_jaccard", "distinct_segment_nation",
+    "emb_quantize_int8", "events_asof_view_before_purchase",
+    "events_daily_rollup_two_level", "events_forward_fill",
+    "events_json_extract", "events_lag_lead_delta",
+    "events_moving_avg_7", "events_outcome_scoring",
+    "events_rank_quartiles", "events_time_grid_3h",
+    "events_top3_winners", "events_user_window_agg",
+    "events_value_histogram", "events_window_function_suite",
+    "latest_events_limit", "orders_date_arithmetic",
+    "orders_pivot_status_by_priority", "part_string_functions",
+    "q12_linestatus_priority_split", "q14_promo_revenue",
+    "q18_large_volume_customers", "q19_bracketed_revenue",
+    "q1_pricing_summary", "q2_cheapest_supplier_per_part",
+    "q4_order_priority_check", "rollup_revenue_by_nation_segment",
+    "segments_intersect_except", "text_norm_pandas_udf",
+    "text_quality_score", "text_token_counts",
+    "top_orders_per_customer", "union_by_name_schema_drift",
+    "urgent_order_lines_semi",
+    # --- plan source edited since its last gate proof
+    "sim_ann_recall_eval", "split_leakage_safe",
+    # --- oldest gate evidence, alphabetical
+    "q22_global_sales_opportunity", "sample_stratified_hash",
+    "sim_incremental_ivf_insert", "sim_ivf_multiprobe",
+    "source_curation_report", "split_train_val_hash",
+    "stream_compaction_report", "stream_windowed_counts",
 ]
 
 

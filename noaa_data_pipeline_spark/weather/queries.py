@@ -8,10 +8,12 @@ Semantics mirror oracle/src/db/weather_data.rs exactly:
 - ``observations_daily`` — the per-station aggregate A2 (:172-211).
 - ``stations`` — the 4-column GROUP-BY dedup A3 (:224-246).
 
-Scale: each is a partition-pruned scan + hash aggregate; the
-two-level rollup keeps station_id as the leading group key so both
-levels hash-partition the same way and AQE coalesces the second
-shuffle away.
+Scale: each is a partition-pruned scan + hash aggregate. The
+two-level rollup shuffles twice: level 1 hash-partitions on
+(station_id, begin_time), and level 2's (station_id, date) grouping
+is not satisfied by that partitioning, so the executed plan holds
+two ``Exchange hashpartitioning`` nodes (AQE is off in the local
+profile, and nothing coalesces them).
 """
 
 from __future__ import annotations

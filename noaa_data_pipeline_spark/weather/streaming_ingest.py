@@ -16,15 +16,13 @@ files; it's a metadata-safe overwrite of one directory.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .schemas import FORECAST_SCHEMA, OBSERVATION_SCHEMA
-
-_SCHEMAS = {"forecasts": FORECAST_SCHEMA, "observations": OBSERVATION_SCHEMA}
+from . import lake
 
 
 def ingest_stream(
@@ -44,8 +42,7 @@ def ingest_stream(
     processed once across restarts; see _append for the write-side
     delivery caveat.
     """
-    schema: T.StructType = _SCHEMAS[file_type]
-    raw = spark.readStream.schema(schema).option("mergeSchema", "true").parquet(inbox_dir)
+    raw = spark.readStream.schema(lake.SCHEMAS[file_type]).parquet(inbox_dir)
     enriched = (
         raw.withColumn("ingested_at", F.col("generated_at"))
         .withColumn("file_type", F.lit(file_type))
@@ -88,11 +85,14 @@ def compact_partition(
     ``target_files`` files. Returns the row count. Scale: compaction
     runs per-partition (parallelize across dates via a scheduler);
     the rewrite never touches other partitions, and readers see the
-    directory atomically swapped by the final rename."""
+    directory atomically swapped by the final rename. The partition
+    is read under its declared file schema, so snapshots that drifted
+    (a nullable column missing) compact into files that carry every
+    column."""
     part_dir = os.path.join(
         lake_root, f"file_type={file_type}", f"ingest_date={ingest_date}"
     )
-    df = spark.read.parquet(part_dir)
+    df = spark.read.schema(lake.file_schema(file_type)).parquet(part_dir)
     n = df.count()
     tmp_dir = part_dir + "__compact_tmp"
     df.coalesce(target_files).write.mode("overwrite").parquet(tmp_dir)
@@ -113,9 +113,16 @@ def compact_partition(
 
 def lake_file_stats(spark: SparkSession, lake_root: str) -> DataFrame:
     """Files-per-partition histogram — the compaction trigger metric."""
-    df = spark.read.option("mergeSchema", "true").option("basePath", lake_root).parquet(lake_root)
+    files = functools.reduce(
+        DataFrame.unionByName,
+        [
+            lake.read_lake(spark, lake_root, ft).select(
+                "file_type", "ingest_date", F.input_file_name().alias("f")
+            )
+            for ft in lake.SCHEMAS
+        ],
+    )
     return (
-        df.select("file_type", "ingest_date", F.input_file_name().alias("f"))
-        .groupBy("file_type", "ingest_date")
+        files.groupBy("file_type", "ingest_date")
         .agg(F.countDistinct("f").alias("n_files"), F.count("*").alias("n_rows"))
     )

@@ -16,6 +16,7 @@ import pytest
 
 from noaa_data_pipeline_spark.weather import api, http_api, lake
 from noaa_data_pipeline_spark.weather.event_store import EventStore
+from noaa_data_pipeline_spark.weather.schemas import OBSERVATION_SCHEMA
 from tests.test_event_store_etl import NOW, OBS_DATE, SIGN_DATE, _build_fixture
 
 
@@ -101,6 +102,31 @@ def test_observations_and_stations_routes(served):
     status, body = _get(base, "/stations")
     assert status == 200
     assert {r["station_id"] for r in body} == {"PFNO", "KSAW", "PAPG", "KWMC"}
+
+
+def test_station_routes_before_a_file_type_lands(spark, tmp_path_factory):
+    """A fresh lake, then one holding only observations: every station
+    route answers 200, with no rows for a type that has no files."""
+    lake_root = str(tmp_path_factory.mktemp("fresh_lake"))
+    store = EventStore(spark, str(tmp_path_factory.mktemp("fresh_store")))
+    files_dir = str(tmp_path_factory.mktemp("fresh_files"))
+    srv, base = http_api.serve_background(
+        http_api.WeatherApp(spark, lake_root, store, files_dir, now=lambda: NOW)
+    )
+    try:
+        for path in ("/stations", "/stations/forecasts", "/stations/observations"):
+            assert _get(base, path) == (200, [])
+        ob = spark.createDataFrame(
+            [("KMSP", "KMSP name", 44.9, -93.2, NOW, 21.1, "celcius",
+              180, "degrees true", 5, "knots", 5.0, "celcius")],
+            OBSERVATION_SCHEMA,
+        )
+        lake.write_snapshot(ob, lake_root, lake.OBSERVATIONS, NOW)
+        assert _get(base, "/stations/forecasts?station_ids=KMSP") == (200, [])
+        status, body = _get(base, "/stations")
+        assert status == 200 and [r["station_id"] for r in body] == ["KMSP"]
+    finally:
+        srv.shutdown()
 
 
 def test_bad_rfc3339_is_400(served):

@@ -5,12 +5,14 @@ the A1/A2/A3 rollups against a DuckDB oracle over the same files."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import duckdb
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from noaa_data_pipeline_spark.weather import lake, queries
+from noaa_data_pipeline_spark.weather import api, lake, queries, streaming_ingest
 from noaa_data_pipeline_spark.weather.schemas import FORECAST_SCHEMA, OBSERVATION_SCHEMA
 
 T0 = dt.datetime(2024, 8, 11, 0, 0, 0)
@@ -121,8 +123,6 @@ def test_observations_daily_and_stations(spark, weather_root):
 
 
 def test_api_layer_round_trip(spark, weather_root):
-    from noaa_data_pipeline_spark.weather import api
-
     fc = api.forecasts(
         spark, weather_root, start=T0, end=T0, station_ids="KMSP, KSEA"
     )
@@ -132,3 +132,76 @@ def test_api_layer_round_trip(spark, weather_root):
     assert len(ob) == 2
     st = api.stations(spark, weather_root)
     assert {r["station_id"] for r in st} == {"KMSP", "KSEA"}
+
+
+def test_reads_before_a_file_type_lands(spark, weather_root, tmp_path):
+    """A file type with no files yet reads as an empty frame under
+    the same schema, so every route answers with no rows."""
+    root = str(tmp_path)
+    assert api.forecasts(spark, root) == []
+    assert api.observations(spark, root) == []
+    assert api.stations(spark, root) == []
+    empty = lake.read_lake(spark, root, lake.FORECASTS)
+    assert empty.columns == lake.read_lake(spark, weather_root, lake.FORECASTS).columns
+
+    ob = spark.createDataFrame(_observation_rows(), OBSERVATION_SCHEMA)
+    lake.write_snapshot(ob, root, lake.OBSERVATIONS, T0)
+    assert api.forecasts(spark, root, start=T0, end=T0, station_ids="KMSP") == []
+    assert {r["station_id"] for r in api.stations(spark, root)} == {"KMSP", "KSEA"}
+
+
+def _rows_per_snapshot(df):
+    """ingested_at -> (rows, non-null dewpoints)."""
+    return {
+        r.ingested_at: (r.n, r.dew)
+        for r in df.groupBy("ingested_at")
+        .agg(F.count("*").alias("n"), F.count("dewpoint_value").alias("dew"))
+        .collect()
+    }
+
+
+def test_snapshot_missing_a_nullable_column(spark, tmp_path):
+    """Schema drift under declared schemas: a snapshot written without
+    ``dewpoint_value`` next to full ones reads back with nulls, and
+    compacting the partition keeps every declared column and row."""
+    root = str(tmp_path)
+    full = spark.createDataFrame(_observation_rows(), OBSERVATION_SCHEMA)
+    t1, t2 = T0 + dt.timedelta(hours=1), T0 + dt.timedelta(hours=2)
+    lake.write_snapshot(full, root, lake.OBSERVATIONS, T0)
+    lake.write_snapshot(full.drop("dewpoint_value"), root, lake.OBSERVATIONS, t1)
+    lake.write_snapshot(full, root, lake.OBSERVATIONS, t2)
+    n = len(_observation_rows())
+    expected = {T0: (n, n), t1: (n, 0), t2: (n, n)}
+    assert _rows_per_snapshot(lake.read_lake(spark, root, lake.OBSERVATIONS)) == expected
+
+    assert streaming_ingest.compact_partition(
+        spark, root, lake.OBSERVATIONS, str(T0.date())
+    ) == 3 * n
+    part = os.path.join(root, "file_type=observations", f"ingest_date={T0.date()}")
+    files = [f for f in os.listdir(part) if f.endswith(".parquet")]
+    assert len(files) == 1
+    assert pq.read_schema(os.path.join(part, files[0])).names == (
+        lake.file_schema(lake.OBSERVATIONS).names
+    )
+    assert _rows_per_snapshot(lake.read_lake(spark, root, lake.OBSERVATIONS)) == expected
+
+
+def test_each_read_route_runs_one_spark_job(spark, weather_root):
+    """Reads plan under the declared schema without a footer-merge job,
+    so each route costs exactly the one job that executes it (with AQE
+    off; AQE runs every shuffle stage as a job of its own)."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(call):
+        before = set(tracker.getJobIdsForGroup(None))
+        call()
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert jobs(lambda: api.forecasts(spark, weather_root, T0, T0, "KMSP")) == 1
+        assert jobs(lambda: api.observations(spark, weather_root, T0, T0)) == 1
+        assert jobs(lambda: api.stations(spark, weather_root)) == 1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
